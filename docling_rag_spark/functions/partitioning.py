@@ -1,6 +1,6 @@
 """Deterministic bucket -> shuffle-partition routing (no sampling job).
 
-The extraction job wants each url-hash bucket in its own shuffle partition
+The extraction job wants whole url-hash buckets in each shuffle partition
 before the parse UDF, so the staged ``partitionBy("bucket")`` write emits one
 file per bucket (plans/job.py). ``repartitionByRange`` delivers that layout
 but pays a SAMPLING JOB — an extra scan of the input per batch whose cost is
@@ -17,7 +17,16 @@ function — so for every target partition ``p`` we can search a small int
 route bucket ``b`` through the literal lookup ``x[index(b)]``. The search is
 driver-side, O(n log n) expected hash evaluations (~1500 for n=256, sub-ms),
 and the routing column is a JVM ``element_at`` on an array literal — zero
-extra jobs, exactly one bucket per partition.
+extra jobs, and a layout chosen exactly rather than by hash luck.
+
+The parse stage packs several whole buckets per partition (bucket *i* of the
+batch -> partition *i mod n*, loads within one bucket of each other) with
+``n`` = the session's cores: every Python task pays a fixed start-up cost —
+PySpark's worker calls ``importlib.invalidate_caches()``, which re-reads the
+zip directory of every zipimporter on ``sys.path`` (~0.24 CPU-s per task on
+Spark 4.1 / Python 3.11) — so one task per bucket spent most of a 1,500-page
+16-bucket job's worker CPU on task start-up (BASELINE.md round 6). The
+JVM-only rewrites (``route_repartition``) keep one bucket per partition.
 
 Parity with Spark is pinned by tests/test_partitioning.py: the Python
 ``murmur3_int32`` below must equal ``F.hash(int32)`` (Spark's
@@ -77,17 +86,21 @@ def partition_preimages(n: int) -> tuple[int, ...]:
 
 
 def bucket_route(bucket_col: Column, batch: list[int],
-                 num_buckets: int) -> Column:
-    """Routing column: ``repartition(len(batch), bucket_route(...))`` puts
-    each bucket of ``batch`` alone in its own shuffle partition.
+                 num_buckets: int,
+                 num_partitions: int | None = None) -> Column:
+    """Routing column: ``repartition(n, bucket_route(..., n))`` packs whole
+    buckets of ``batch`` onto ``n`` shuffle partitions (default
+    ``len(batch)``: each bucket alone in its own partition). Bucket
+    ``batch[i]`` goes to partition ``i % n``, so partition loads differ by
+    at most one bucket and no bucket is ever split.
 
     ``batch`` lists the active bucket ids (subset of 0..num_buckets-1);
     rows are assumed already filtered to those buckets. Inactive slots in
     the lookup array are routed to partition 0 (unused)."""
-    pre = partition_preimages(len(batch))
+    pre = partition_preimages(num_partitions or len(batch))
     lookup = [pre[0]] * num_buckets
     for i, b in enumerate(batch):
-        lookup[b] = pre[i]
+        lookup[b] = pre[i % len(pre)]
     return F.element_at(F.lit(lookup), bucket_col + F.lit(1))
 
 

@@ -207,6 +207,10 @@ def _run_extraction_inner(
     step = buckets_per_batch or len(todo)
     batches = [todo[i:i + step] for i in range(0, len(todo), step)]
     staging_root = os.path.join(out_dir, "_staging")
+    # parse-stage width: more Python tasks than cores only adds per-task
+    # start-up cost (see the routing comment below)
+    cores = spark.sparkContext.defaultParallelism
+    salt = min(salt_partitions, cores)
 
     import sys
     import time as _time
@@ -245,20 +249,27 @@ def _run_extraction_inner(
             # salted secondary key: buckets split across tasks (a few files per
             # bucket) rather than capping parallelism at num_buckets.
             # bucket_route (not repartitionByRange, not hash-repartition):
-            # murmur3-preimage routing puts exactly one whole bucket in each
-            # shuffle partition with ZERO extra jobs — repartitionByRange
-            # pays a per-batch sampling scan of the input (pure Amdahl tail
-            # in N-vs-4N scaling; measured 1.1-2.0 s/run via event logs),
-            # and hash partitioning on a low-cardinality key leaves ~1/e of
-            # slots empty while stacking 3-4 buckets on others (stragglers
-            # in the expensive parse stage). See functions/partitioning.py.
-            if len(batch) >= 2 * salt_partitions:
+            # murmur3-preimage routing packs whole buckets onto the shuffle
+            # partitions with ZERO extra jobs — repartitionByRange pays a
+            # per-batch sampling scan of the input (pure Amdahl tail in
+            # N-vs-4N scaling; measured 1.1-2.0 s/run via event logs), and
+            # hash partitioning on a low-cardinality key leaves ~1/e of slots
+            # empty while stacking 3-4 buckets on others (stragglers in the
+            # expensive parse stage). See functions/partitioning.py.
+            # Both branches run at most one Python task per core: each task
+            # pays a fixed ~0.24 CPU-s worker start-up (PySpark's
+            # importlib.invalidate_caches() re-reading every zipimporter's
+            # directory) — a pass-through mapInPandas measured 4.6-6.2
+            # worker CPU-s over 16 one-row partitions, 1.2-1.7 over 4
+            # (BASELINE.md round 6).
+            if len(batch) >= 2 * salt:
                 from docling_rag_spark.functions.partitioning import bucket_route
+                n_parts = min(len(batch), cores)
                 sub = sub.repartition(
-                    len(batch),
-                    bucket_route(F.col("bucket"), batch, num_buckets))
+                    n_parts,
+                    bucket_route(F.col("bucket"), batch, num_buckets, n_parts))
             else:
-                sub = sub.repartition(max(len(batch), salt_partitions),
+                sub = sub.repartition(min(max(len(batch), salt), cores),
                                       F.col("bucket"),
                                       F.xxhash64("url", F.lit(0x5A17)))
 
@@ -294,12 +305,11 @@ def _run_extraction_inner(
             # the second-largest Amdahl term in N-vs-4N scaling. Resize to
             # ~2.5 splits/core of the STAGED bytes for the derivation reads,
             # restored after the batch commits.
-            _cores = spark.sparkContext.defaultParallelism
             _staged_bytes = _input_bytes(docs_dir)
             _prev_mpb = None
             if _staged_bytes:
                 _tgt = max(1 << 20, min(128 << 20,
-                                        _staged_bytes * 2 // (5 * _cores) or 1))
+                                        _staged_bytes * 2 // (5 * cores) or 1))
                 _prev_mpb = spark.conf.get("spark.sql.files.maxPartitionBytes",
                                            None)
                 spark.conf.set("spark.sql.files.maxPartitionBytes", str(_tgt))

@@ -219,3 +219,47 @@ def test_format_search_results_contract():
     assert blocks[0] == "[1] dv.pdf (p.42, score=0.88) [Ch 2]\n" \
                         "Data Vault uses hubs."
     assert blocks[1] == "[2] notes.md (p.?, score=0.50)\nSecond fact."
+
+
+def test_search_warehouse_unpersists_hits(spark, tmp_path, monkeypatch):
+    """search_warehouse pins its top-k hits for the decoration joins and
+    releases them on every exit, a failed decoration included: a
+    long-lived serving session must not gain a persisted RDD per call."""
+    from pyspark.sql import functions as F
+
+    from docling_rag_spark.api import service
+    from docling_rag_spark.io import warehouse as wh
+    from docling_rag_spark.plans.job import run_extraction
+    from docling_rag_spark.sources.pages import write_pages_parquet
+
+    pages = str(tmp_path / "pages.parquet")
+    out = str(tmp_path / "wh")
+    write_pages_parquet(pages, 30)
+    run_extraction(spark, pages, out, num_buckets=4)
+
+    def persisted():
+        return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+    before = persisted()
+    for q in ("star schema", "pasta water"):
+        assert service.search_warehouse(spark, out, q, top_k=3, log=False)
+    assert persisted() == before
+
+    real_read = wh.read_table
+
+    def failing_read(spark_, warehouse, table, *a, **kw):
+        df = real_read(spark_, warehouse, table, *a, **kw)
+        if table == "extracted":
+            # fails at execution, after the pinned hits were built
+            df = df.withColumn("title", F.raise_error(F.lit("boom")))
+        return df
+
+    monkeypatch.setattr(wh, "read_table", failing_read)
+    with pytest.raises(Exception, match="boom"):
+        service.search_warehouse(spark, out, "star schema", top_k=3,
+                                 log=False)
+    monkeypatch.undo()
+    assert persisted() == before
+    assert service.search_warehouse(spark, out, "star schema", top_k=3,
+                                    log=False)
+    assert persisted() == before

@@ -27,17 +27,30 @@ def test_bucket_balances_hot_host(spark):
 
 
 def test_partitions_align_with_buckets(spark):
-    """The job's bucket-aligned repartition keeps whole buckets per
-    partition (one file per bucket at write time)."""
-    urls = [f"https://h{i % 11}.example/{i}" for i in range(500)]
+    """The job's bucket-aligned repartition (bucket_route packed onto the
+    session's cores, plans/job.py) keeps whole buckets per partition (one
+    file per bucket at write time) and spreads a hot host's urls evenly."""
+    from docling_rag_spark.functions.partitioning import bucket_route
+
+    n_buckets = 16
+    cores = spark.sparkContext.defaultParallelism
+    batch = list(range(n_buckets))
+    urls = ([f"https://hot.example/p/{i}" for i in range(400)]
+            + [f"https://h{i % 11}.example/{i}" for i in range(100)])
     df = (spark.createDataFrame(pd.DataFrame({"url": urls}))
-          .withColumn("bucket", bucket_of(F.col("url"), 16))
-          .repartition(16, F.col("bucket")))
+          .withColumn("bucket", bucket_of(F.col("url"), n_buckets))
+          .repartition(cores, bucket_route(F.col("bucket"), batch,
+                                           n_buckets, cores)))
     per_part = df.rdd.mapPartitions(
-        lambda rows: [len({r["bucket"] for r in rows})]).collect()
-    # a partition holds few whole buckets, never a fragment of many
-    assert all(n <= 3 for n in per_part)
-    assert sum(n > 0 for n in per_part) >= 8
+        lambda rows: [[r["bucket"] for r in rows]]).collect()
+    buckets = [set(p) for p in per_part]
+    assert len(buckets) == cores and all(buckets)
+    held = sorted(b for bs in buckets for b in bs)
+    assert held == batch                      # no bucket split across tasks
+    lo, hi = n_buckets // cores, -(-n_buckets // cores)
+    assert all(lo <= len(bs) <= hi for bs in buckets)
+    # the hot host is spread by url hash, not stacked on one task
+    assert max(len(p) for p in per_part) < 2 * len(urls) / cores
 
 
 def test_aqe_skew_join_engages(spark):
