@@ -23,7 +23,7 @@ index WITHOUT touching the corpus text again:
   unconditional broadcast was a guaranteed driver OOM at the 10^8-page
   delta this module advertises: 10^8 x 16 band rows is tens of GB);
 * pair emission: the same group-cap + star-edge semantics as the batch
-  path (``_MINHASH_GROUP_CAP``), computed over touched buckets only —
+  path (``functions/capped.py``), computed over touched buckets only —
   bucket size and min-id rep are exact because the semi-join returns
   EVERY corpus member of a touched bucket;
 * append: the delta's band rows land through the same bucketed writer,
@@ -43,11 +43,11 @@ import os
 import tempfile
 import uuid
 
-from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from docling_rag_spark.functions import capped
 from docling_rag_spark.queries.dedup import (
-    _BAND_SIZE, _MINHASH_GROUP_CAP, _NUM_PERMS, _SHINGLE_K, band_sigs_for,
+    _BAND_SIZE, _NUM_PERMS, _SHINGLE_K, band_sigs_for,
 )
 
 BANDS_SUBDIR = "minhash_bands"
@@ -145,7 +145,7 @@ def _touched_members(idx, dkeys, broadcast: bool):
 
 
 def incremental_minhash_pairs(spark, delta_docs, index_dir: str,
-                              group_cap: int | None = _MINHASH_GROUP_CAP,
+                              group_cap: int | None = capped.GROUP_CAP,
                               broadcast_max_rows: int = _BCAST_MAX_ROWS):
     """LSH candidate pairs involving at least one delta doc, against the
     materialized index — identical rows to the batch job's capped pairs
@@ -168,33 +168,24 @@ def incremental_minhash_pairs(spark, delta_docs, index_dir: str,
     touched = _touched_members(idx, dkeys,
                                broadcast=n_delta <= broadcast_max_rows)
 
-    mem = (touched.withColumn("is_new", F.lit(False))
-           .unionByName(delta.withColumn("is_new", F.lit(True))))
-    w = Window.partitionBy("band", "band_sig")
-    mem = mem.select(
-        "doc_id", "band", "band_sig", "is_new",
-        F.count("*").over(w).alias("n"),
-        F.min("doc_id").over(w).alias("rep"),
-        F.min(F.when(F.col("is_new"), F.col("doc_id"))).over(w)
-        .alias("new_min"))
-
-    small = mem if group_cap is None else mem.filter(
-        F.col("n") <= group_cap)
+    keys = ["band", "band_sig"]
+    mem = capped.sized(touched.withColumn("is_new", F.lit(False))
+                       .unionByName(delta.withColumn("is_new", F.lit(True))),
+                       keys, "doc_id")
+    small, star = capped.split(mem, keys, "doc_id", group_cap,
+                               payload=["is_new"])
     a, b = small.alias("a"), small.alias("b")
     pairs = (a.join(b, (F.col("a.band") == F.col("b.band"))
                     & (F.col("a.band_sig") == F.col("b.band_sig"))
                     & (F.col("a.doc_id") < F.col("b.doc_id")))
              .filter(F.col("a.is_new") | F.col("b.is_new"))
              .select(F.col("a.doc_id").cast("bigint").alias("doc_a"),
-                     F.col("b.doc_id").cast("bigint").alias("doc_b")))
-    if group_cap is not None:
-        star = (mem.filter((F.col("n") > group_cap)
-                           & (F.col("doc_id") != F.col("rep"))
-                           & (F.col("is_new")
-                              | (F.col("rep") == F.col("new_min"))))
-                .select(F.col("rep").cast("bigint").alias("doc_a"),
-                        F.col("doc_id").cast("bigint").alias("doc_b")))
-        pairs = pairs.union(star)
+                     F.col("b.doc_id").cast("bigint").alias("doc_b"))
+             .union(star.filter(F.col("pivot_is_new")
+                                | F.col("member_is_new"))
+                    .select(F.col("pivot_id").cast("bigint").alias("doc_a"),
+                            F.col("member_id").cast("bigint")
+                            .alias("doc_b"))))
     return (pairs.groupBy("doc_a", "doc_b")
             .agg(F.count("*").cast("bigint").alias("n_shared_bands")))
 

@@ -21,7 +21,7 @@ These two operators add that tier:
   the same cluster has quantized-cosine >= the threshold (keep-first
   canonicalization, mirroring dedup_keep_first). One shuffle on cluster
   id into ``applyInPandas`` for in-cap clusters (exact gram, ≤
-  _SEMDEDUP_CLUSTER_CAP members — ~250 is only the AVERAGE k-means
+  ``capped.GROUP_CAP`` members — ~250 is only the AVERAGE k-means
   delivers); over-cap clusters (a template-farm mass of near-identical
   embeddings lands in ONE cluster regardless of k) skip the Python
   worker entirely and run a linear keyed join against the cluster's
@@ -49,6 +49,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
+
+from docling_rag_spark.functions import capped
 
 _K_MIN = 4
 _K_DIVISOR = 250   # k scales with corpus: ~250 vectors per cluster
@@ -145,23 +147,17 @@ def vec_kmeans_assign(spark, sf_dir):
 _SEMDEDUP_SCHEMA = ("cluster bigint, drop_id bigint, kept_by bigint, "
                     "max_cos_e6 bigint")
 
-# Per-cluster member cap before the pivot fallback. ~250/cluster is the
-# AVERAGE k-means delivers (k = n / _K_DIVISOR) — it is not a bound:
-# a template-farm mass of near-identical embeddings lands in ONE cluster
-# regardless of k (same structure the minhash/simhash band caps defend
-# against), and the full per-cluster gram is then O(m²) memory inside a
-# single applyInPandas worker. In-cap clusters keep the exact gram
-# (cap² doubles ≈ 8 MB); over-cap clusters degrade to the linear pivot
-# rule below, with the loss observable via vec_semdedup_cluster_stats.
-_SEMDEDUP_CLUSTER_CAP = 1000
-# Over-cap rule: each member is compared only against the cluster's
-# _SEMDEDUP_PIVOTS smallest-id members (m × pivots rows — linear, keyed
-# join, no Python materialization of the cluster). Keep-first semantics
-# are preserved exactly for the structure that creates over-cap clusters
-# (a near-identical mass matches pivot #1, the cluster's minimum id, so
-# the drop set and kept_by equal the uncapped answer — pytest-pinned);
-# recall is lost only for pairs whose BOTH endpoints are outside the
-# pivot set with no pivot near them.
+# Over-cap clusters (a template-farm mass of near-identical embeddings
+# lands in ONE cluster regardless of k, and the full per-cluster gram is
+# O(m²) memory inside a single applyInPandas worker) compare each member
+# only against the cluster's _SEMDEDUP_PIVOTS smallest-id members
+# (``functions/capped.py``; m × pivots rows — linear, keyed join, no
+# Python materialization of the cluster). Keep-first semantics are
+# preserved exactly for the structure that creates over-cap clusters (a
+# near-identical mass matches pivot #1, the cluster's minimum id, so the
+# drop set and kept_by equal the uncapped answer — pytest-pinned); recall
+# is lost only for pairs whose BOTH endpoints are outside the pivot set
+# with no pivot near them. vec_semdedup_cluster_stats reports the loss.
 _SEMDEDUP_PIVOTS = 64
 
 
@@ -178,16 +174,12 @@ def _nrm_col(qv):
 
 
 def vec_semdedup_drop(spark, sf_dir,
-                      cluster_cap: int | None = _SEMDEDUP_CLUSTER_CAP,
+                      cluster_cap: int | None = capped.GROUP_CAP,
                       pivots: int = _SEMDEDUP_PIVOTS):
-    from pyspark.sql import Window
-
     a = _final_assignment(spark, sf_dir).select("vec_id", "qv", "cluster")
-    w = Window.partitionBy("cluster")
-    wr = w.orderBy("vec_id")
-    sized = a.select("vec_id", "qv", "cluster",
-                     F.count("*").over(w).alias("cn"),
-                     F.row_number().over(wr).alias("rk"))
+    # nrm is projected above the window, so only over-cap rows compute it
+    sized = (capped.sized(a, ["cluster"], "vec_id", pivots)
+             .withColumn("nrm", _nrm_col(F.col("qv"))))
 
     def per_cluster(pdf):
         pdf = pdf.sort_values("vec_id")
@@ -215,35 +207,23 @@ def vec_semdedup_drop(spark, sf_dir,
         out.insert(0, "cluster", int(pdf["cluster"].iloc[0]))
         return out
 
-    small = sized if cluster_cap is None else sized.filter(
-        F.col("cn") <= cluster_cap)
+    small, edges = capped.split(sized, ["cluster"], "vec_id", cluster_cap,
+                                pivots, payload=["qv", "nrm"])
     res = (small.select("vec_id", "qv", "cluster")
            .groupBy("cluster").applyInPandas(per_cluster,
                                              schema=_SEMDEDUP_SCHEMA))
-    if cluster_cap is None:
-        return res
-
-    big = sized.filter(F.col("cn") > cluster_cap)
-    piv = (big.filter(F.col("rk") <= pivots)
-           .select("cluster", F.col("vec_id").alias("u_id"),
-                   F.col("qv").alias("u_qv"),
-                   _nrm_col(F.col("qv")).alias("u_nrm")))
-    v = big.select("cluster", F.col("vec_id").alias("drop_id"),
-                   F.col("qv").alias("v_qv"),
-                   _nrm_col(F.col("qv")).alias("v_nrm"))
     cos_e6 = F.floor(
         F.aggregate(
-            F.zip_with(F.col("u_qv"), F.col("v_qv"),
-                       lambda x, y: (x.cast("double") / F.col("u_nrm"))
-                       * (y.cast("double") / F.col("v_nrm"))),
+            F.zip_with(F.col("pivot_qv"), F.col("member_qv"),
+                       lambda x, y: (x.cast("double") / F.col("pivot_nrm"))
+                       * (y.cast("double") / F.col("member_nrm"))),
             F.lit(0.0), lambda acc, t: acc + t)
         * F.lit(1000000.0)).cast("bigint")
-    over = (v.join(piv, "cluster")
-            .filter(F.col("u_id") < F.col("drop_id"))
-            .select("cluster", "drop_id", "u_id", cos_e6.alias("cos_e6"))
+    over = (edges.select("cluster", F.col("member_id").alias("drop_id"),
+                         "pivot_id", cos_e6.alias("cos_e6"))
             .filter(F.col("cos_e6") >= F.lit(_SEMDEDUP_MIN_E6))
             .groupBy("cluster", "drop_id")
-            .agg(F.min("u_id").alias("kept_by"),
+            .agg(F.min("pivot_id").alias("kept_by"),
                  F.max("cos_e6").alias("max_cos_e6"))
             .select(F.col("cluster").cast("bigint").alias("cluster"),
                     F.col("drop_id").cast("bigint").alias("drop_id"),
@@ -253,27 +233,22 @@ def vec_semdedup_drop(spark, sf_dir,
     return res.unionByName(over)
 
 
-def vec_semdedup_cluster_stats(spark, sf_dir):
-    """Cap observability for the SemDeDup clusters (the twin of
+_SEMDEDUP_STATS_NAMES = ("n_clusters", "n_over_cap", "max_cluster",
+                         "n_pair_rows_saved")
+
+
+def vec_semdedup_cluster_stats(spark, sf_dir,
+                               cluster_cap: int | None = capped.GROUP_CAP,
+                               pivots: int = _SEMDEDUP_PIVOTS):
+    """Cap observability for the SemDeDup clusters at the same
+    ``cluster_cap``/``pivots`` as ``vec_semdedup_drop`` (the twin of
     ``dedup_minhash_group_stats``): cluster count, how many exceeded the
     member cap, the largest cluster, and the quadratic pair rows the
     pivot fallback avoided — the number a production run logs to prove
     the mega-cluster defense engaged."""
     g = (_final_assignment(spark, sf_dir)
          .groupBy("cluster").agg(F.count("*").cast("bigint").alias("n")))
-    over = F.col("n") > _SEMDEDUP_CLUSTER_CAP
-    p = F.lit(_SEMDEDUP_PIVOTS)
-    # over-cap pair rows: each pivot u (rank r_u) pairs with the n - r_u
-    # members above it → p·n - p(p+1)/2; full expansion is n(n-1)/2
-    saved = (F.expr("n * (n - 1) DIV 2")
-             - (p * F.col("n") - F.expr(
-                 f"{_SEMDEDUP_PIVOTS} * ({_SEMDEDUP_PIVOTS} + 1) DIV 2")))
-    return g.agg(
-        F.count("*").cast("bigint").alias("n_clusters"),
-        F.sum(over.cast("bigint")).cast("bigint").alias("n_over_cap"),
-        F.max("n").cast("bigint").alias("max_cluster"),
-        F.sum(F.when(over, saved).otherwise(0)).cast("bigint")
-        .alias("n_pair_rows_saved"))
+    return capped.stats(g, cluster_cap, pivots).toDF(*_SEMDEDUP_STATS_NAMES)
 
 
 # --- DuckDB twins: the same two Lloyd rounds as unrolled CTEs ----------------
@@ -327,26 +302,19 @@ FROM a2
 """
 
 
-_SEMDEDUP_COS = """floor(list_reduce(list_transform(range(1, {d1}),
-                 i -> (a.qv[i]::DOUBLE / a.nrm)
-                      * (b.qv[i]::DOUBLE / b.nrm)), (x, y) -> x + y)
-               * 1000000.0)::BIGINT""".format(d1=_DIM + 1)
+def _semdedup_cos(qa, na, qb, nb):
+    return f"""floor(list_reduce(list_transform(range(1, {_DIM + 1}),
+                 i -> ({qa}[i]::DOUBLE / {na})
+                      * ({qb}[i]::DOUBLE / {nb})), (x, y) -> x + y)
+               * 1000000.0)::BIGINT"""
 
 
-def semdedup_sql(cluster_cap: int | None = _SEMDEDUP_CLUSTER_CAP,
+def semdedup_sql(cluster_cap: int | None = capped.GROUP_CAP,
                  pivots: int = _SEMDEDUP_PIVOTS) -> str:
     """DuckDB twin of ``vec_semdedup_drop`` — the cluster cap + pivot
-    fallback mirrored EXACTLY (count/rank windows per cluster, in-cap
-    full expansion, over-cap keep side restricted to the ``pivots``
-    smallest-id members)."""
-    small_pred = ("" if cluster_cap is None
-                  else f"\n  WHERE a.cn <= {cluster_cap}")
-    big = "" if cluster_cap is None else f"""
-  UNION ALL
-  SELECT a.cluster, a.vec_id AS keep_id, b.vec_id AS drop_id,
-         {_SEMDEDUP_COS} AS cos_e6
-  FROM nq a JOIN nq b ON a.cluster = b.cluster AND a.vec_id < b.vec_id
-  WHERE a.cn > {cluster_cap} AND a.rk <= {pivots}"""
+    fallback mirrored EXACTLY through ``functions/capped.py``'s twins."""
+    small, edges = capped.split_sql("sized", ["cluster"], "vec_id",
+                                    cluster_cap, pivots, ["qv", "nrm"])
     return f"""
 WITH {_kmeans_cte()},
 nq AS (
@@ -354,16 +322,20 @@ nq AS (
          coalesce(nullif(
            sqrt(list_reduce(list_transform(range(1, {_DIM + 1}),
                 i -> qv[i]::DOUBLE * qv[i]::DOUBLE), (a, b) -> a + b)),
-           0.0), 1.0) AS nrm,  -- zero vectors match nothing (Spark twin
-                               -- sets nrm=1.0; 0/0 would NaN here)
-         count(*) OVER (PARTITION BY cluster) AS cn,
-         row_number() OVER (PARTITION BY cluster ORDER BY vec_id) AS rk
+           0.0), 1.0) AS nrm  -- zero vectors match nothing (Spark twin
+                              -- sets nrm=1.0; 0/0 would NaN here)
   FROM a2),
+sized AS ({capped.sized_sql("nq", ["cluster"], "vec_id", pivots)}),
+small AS ({small}),
 pairs AS (
   SELECT a.cluster, a.vec_id AS keep_id, b.vec_id AS drop_id,
-         {_SEMDEDUP_COS} AS cos_e6
-  FROM nq a JOIN nq b ON a.cluster = b.cluster
-   AND a.vec_id < b.vec_id{small_pred}{big})
+         {_semdedup_cos("a.qv", "a.nrm", "b.qv", "b.nrm")} AS cos_e6
+  FROM small a JOIN small b ON a.cluster = b.cluster
+   AND a.vec_id < b.vec_id
+  UNION ALL
+  SELECT cluster, pivot_id, member_id,
+         {_semdedup_cos("pivot_qv", "pivot_nrm", "member_qv", "member_nrm")}
+  FROM ({edges}))
 SELECT cluster::BIGINT AS cluster, drop_id::BIGINT AS drop_id,
        min(keep_id)::BIGINT AS kept_by, max(cos_e6)::BIGINT AS max_cos_e6
 FROM pairs WHERE cos_e6 >= {_SEMDEDUP_MIN_E6}
@@ -374,20 +346,18 @@ GROUP BY cluster, drop_id
 SEMDEDUP_SQL = semdedup_sql()
 
 
-SEMDEDUP_CLUSTER_STATS_SQL = f"""
+def semdedup_cluster_stats_sql(cluster_cap: int | None = capped.GROUP_CAP,
+                               pivots: int = _SEMDEDUP_PIVOTS) -> str:
+    """DuckDB twin of ``vec_semdedup_cluster_stats``."""
+    return f"""
 WITH {_kmeans_cte()},
 g AS (SELECT cluster, count(*)::BIGINT AS n FROM a2 GROUP BY cluster)
-SELECT count(*)::BIGINT AS n_clusters,
-       sum(CASE WHEN n > {_SEMDEDUP_CLUSTER_CAP} THEN 1 ELSE 0 END)::BIGINT
-         AS n_over_cap,
-       max(n)::BIGINT AS max_cluster,
-       sum(CASE WHEN n > {_SEMDEDUP_CLUSTER_CAP}
-                THEN n * (n - 1) // 2
-                     - ({_SEMDEDUP_PIVOTS} * n
-                        - {_SEMDEDUP_PIVOTS} * ({_SEMDEDUP_PIVOTS} + 1) // 2)
-                ELSE 0 END)::BIGINT AS n_pair_rows_saved
-FROM g
+SELECT * FROM ({capped.stats_sql("g", cluster_cap, pivots)})
+  t({", ".join(_SEMDEDUP_STATS_NAMES)})
 """
+
+
+SEMDEDUP_CLUSTER_STATS_SQL = semdedup_cluster_stats_sql()
 
 
 QUERIES: dict = {}

@@ -50,6 +50,8 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from docling_rag_spark.functions import capped
+
 _P = 2147483647          # Mersenne prime 2^31-1 for the minhash permutations
 # Production LSH shape (VERDICT r3 task 1): 128 permutations in 16 bands of
 # 8 rows. Candidate probability is 1 - (1 - j^8)^16 — the S-curve midpoint
@@ -387,58 +389,41 @@ def band_sigs_for(docs):
                     "band_sig"))
 
 
-# Per-(band, band_sig) bucket cap before star-edge fallback — the same
-# template-cluster defense the simhash path carries (_SIMHASH_GROUP_CAP):
-# a near-identical cluster of m docs shares all 16 band signatures, so the
-# uncapped band self-join emits 16·m²/2 rows from ONE bucket (a 100k-doc
-# template cluster — the dominant dup structure in web crawls — is 8·10¹³
-# join rows). Above the cap the bucket degrades to star edges through its
-# minimum-id representative: linear output, component-equivalent (every
-# member still reaches every other through the rep, so dedup_components
-# and plans/curate.py keep-one-per-cluster are unchanged). Realized
-# pairwise recall under the cap stays measured by dedup_minhash_recall;
-# dedup_minhash_group_stats exposes how many buckets capped.
-_MINHASH_GROUP_CAP = 1000
-
-
-def banded_pairs_for(bands, group_cap: int | None = _MINHASH_GROUP_CAP):
+def banded_pairs_for(bands, group_cap: int | None = capped.GROUP_CAP):
     """(doc_a, doc_b, n_shared_bands) candidate pairs from a
     (doc_id, band, band_sig) frame, with the per-bucket group cap.
 
+    A near-identical cluster of m docs shares all 16 band signatures, so
+    the uncapped band self-join emits 16·m²/2 rows from ONE bucket (a
+    100k-doc template cluster is 8·10¹³ join rows). Over-cap buckets
+    degrade to star edges through their minimum-id rep
+    (``functions/capped.py``): linear output, component-equivalent, so
+    dedup_components and plans/curate.py keep-one-per-cluster are
+    unchanged. ``dedup_minhash_recall`` measures the realized recall and
+    ``dedup_minhash_group_stats`` how many buckets capped.
+
     Shape: ONE shuffle on (band, band_sig) — the window computes bucket
     size + min-id rep without materializing member arrays (an over-cap
-    bucket never becomes a collected row); in-cap buckets (≤ group_cap)
-    expand to all pairs via the sorted-array HOF (bounded cap²/2 structs
-    per bucket row), over-cap buckets emit (rep, member) star edges —
-    O(m) rows. The final pair groupBy is candidate-bounded (≤ 16 bands
-    per pair)."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("band", "band_sig")
-    mem = bands.select(
-        "doc_id", "band", "band_sig",
-        F.count("*").over(w).alias("n"),
-        F.min("doc_id").over(w).alias("rep"))
-    small = mem.filter(F.col("n") >= 2)
-    star = None
-    if group_cap is not None:
-        small = small.filter(F.col("n") <= group_cap)
-        star = (mem.filter((F.col("n") > group_cap)
-                           & (F.col("doc_id") != F.col("rep")))
-                .select(F.col("rep").cast("bigint").alias("doc_a"),
-                        F.col("doc_id").cast("bigint").alias("doc_b")))
-    pairs = (small.groupBy("band", "band_sig")
+    bucket never becomes a collected row); in-cap buckets expand to all
+    pairs via the sorted-array HOF (bounded cap²/2 structs per bucket
+    row). The final pair groupBy is candidate-bounded (≤ 16 bands per
+    pair)."""
+    keys = ["band", "band_sig"]
+    small, star = capped.split(capped.sized(bands, keys, "doc_id"), keys,
+                               "doc_id", group_cap)
+    pairs = (small.filter(F.col("n") >= 2).groupBy(*keys)
              .agg(F.array_sort(F.collect_list("doc_id")).alias("ds"))
              .select(F.explode(_pair_structs(F.col("ds"))).alias("p"))
              .select(F.col("p.doc_a").cast("bigint").alias("doc_a"),
                      F.col("p.doc_b").cast("bigint").alias("doc_b")))
-    if star is not None:
-        pairs = pairs.union(star)
+    pairs = pairs.union(
+        star.select(F.col("pivot_id").cast("bigint").alias("doc_a"),
+                    F.col("member_id").cast("bigint").alias("doc_b")))
     return (pairs.groupBy("doc_a", "doc_b")
             .agg(F.count("*").cast("bigint").alias("n_shared_bands")))
 
 
-def minhash_pairs_for(docs, group_cap: int | None = _MINHASH_GROUP_CAP):
+def minhash_pairs_for(docs, group_cap: int | None = capped.GROUP_CAP):
     """LSH candidate pairs for any (doc_id bigint, text) DataFrame."""
     return banded_pairs_for(band_sigs_for(docs), group_cap)
 
@@ -454,36 +439,33 @@ _MINHASH_BANDS_SQL = f"""
 """
 
 
-def minhash_pairs_sql(group_cap: int | None = _MINHASH_GROUP_CAP) -> str:
+def minhash_pairs_sql(group_cap: int | None = capped.GROUP_CAP) -> str:
     """DuckDB twin of ``minhash_pairs_for`` — the group cap + star-edge
-    fallback mirrored EXACTLY (count/min window per bucket, in-cap full
-    expansion, over-cap (rep, member) edges)."""
-    cap_pred = "" if group_cap is None else f"\n  WHERE a.n <= {group_cap}"
-    star = "" if group_cap is None else f"""
-  UNION ALL
-  SELECT rep AS doc_a, doc_id AS doc_b FROM mem
-  WHERE n > {group_cap} AND doc_id <> rep"""
+    fallback mirrored EXACTLY through ``functions/capped.py``'s twins."""
+    keys = ["band", "band_sig"]
+    small, star = capped.split_sql("mem", keys, "doc_id", group_cap)
     return f"""
 WITH sig AS ({MINHASH_SIG_SQL}),
 bands AS ({_MINHASH_BANDS_SQL}),
-mem AS (
-  SELECT doc_id, band, band_sig,
-         count(*) OVER (PARTITION BY band, band_sig) AS n,
-         min(doc_id) OVER (PARTITION BY band, band_sig) AS rep
-  FROM bands
-),
+mem AS ({capped.sized_sql("bands", keys, "doc_id")}),
+small AS ({small}),
 pairs AS (
   SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
-  FROM mem a JOIN mem b
+  FROM small a JOIN small b
     ON a.band = b.band AND a.band_sig = b.band_sig
-   AND a.doc_id < b.doc_id{cap_pred}{star}
+   AND a.doc_id < b.doc_id
+  UNION ALL
+  SELECT pivot_id, member_id FROM ({star})
 )
 SELECT doc_a, doc_b, count(*)::BIGINT AS n_shared_bands
 FROM pairs GROUP BY doc_a, doc_b
 """
 
 
-MINHASH_PAIRS_SQL = minhash_pairs_sql(_MINHASH_GROUP_CAP)
+MINHASH_PAIRS_SQL = minhash_pairs_sql()
+
+_MINHASH_STATS_NAMES = ("n_buckets", "n_buckets_capped", "max_bucket",
+                        "n_pair_rows_saved")
 
 
 def dedup_minhash_group_stats(spark, sf_dir):
@@ -495,14 +477,7 @@ def dedup_minhash_group_stats(spark, sf_dir):
     g = (band_sigs_for(_t(spark, sf_dir, "documents"))
          .groupBy("band", "band_sig")
          .agg(F.count("*").cast("bigint").alias("n")))
-    over = F.col("n") > _MINHASH_GROUP_CAP
-    saved = F.expr("n * (n - 1) DIV 2 - (n - 1)")
-    return g.agg(
-        F.count("*").cast("bigint").alias("n_buckets"),
-        F.sum(over.cast("bigint")).cast("bigint").alias("n_buckets_capped"),
-        F.max("n").cast("bigint").alias("max_bucket"),
-        F.sum(F.when(over, saved).otherwise(0))
-        .cast("bigint").alias("n_pair_rows_saved"))
+    return capped.stats(g).toDF(*_MINHASH_STATS_NAMES)
 
 
 MINHASH_GROUP_STATS_SQL = f"""
@@ -512,14 +487,7 @@ g AS (
   SELECT band, band_sig, count(*)::BIGINT AS n
   FROM bands GROUP BY band, band_sig
 )
-SELECT count(*)::BIGINT AS n_buckets,
-       sum(CASE WHEN n > {_MINHASH_GROUP_CAP} THEN 1 ELSE 0 END)::BIGINT
-         AS n_buckets_capped,
-       max(n)::BIGINT AS max_bucket,
-       sum(CASE WHEN n > {_MINHASH_GROUP_CAP}
-                THEN n * (n - 1) // 2 - (n - 1) ELSE 0 END)::BIGINT
-         AS n_pair_rows_saved
-FROM g
+SELECT * FROM ({capped.stats_sql("g")}) t({", ".join(_MINHASH_STATS_NAMES)})
 """
 
 
@@ -640,7 +608,6 @@ FROM bits GROUP BY doc_id
 
 _SIMHASH_MAX_HAMMING = 6
 _SIMHASH_BAND_CAP = 1000   # max DISTINCT fingerprints per band bucket
-_SIMHASH_GROUP_CAP = 1000  # docs per identical-fp group before star fallback
 
 # Segment-COMBINATION banding (Manku/Jain/Das Sarma, WWW'07 §3, public):
 # split the 48 bits into s = hamming_max + 3 segments and block on every
@@ -779,7 +746,7 @@ def _seg_explode(spark, df, band_alias, val_alias, keep, rot=0):
 
 def dedup_simhash_pairs(spark, sf_dir,
                         band_cap: int | None = _SIMHASH_BAND_CAP,
-                        group_cap: int | None = _SIMHASH_GROUP_CAP):
+                        group_cap: int | None = capped.GROUP_CAP):
     """Hamming-ball pair join, structured for template-heavy web corpora:
 
     1. Group identical fingerprints. Hamming-0 pairs come from
@@ -816,37 +783,30 @@ def dedup_simhash_pairs(spark, sf_dir,
 
     fp = (dedup_simhash(spark, sf_dir)
           .persist(StorageLevel.MEMORY_AND_DISK))
-    cnt = (fp.groupBy("simhash")
-           .agg(F.count("*").cast("bigint").alias("n"),
-                F.min("doc_id").cast("bigint").alias("rep"))
+    fps = (fp.select("simhash").distinct()
            .persist(StorageLevel.MEMORY_AND_DISK))
-    cnt.count()  # eager: 4 consumers would race the cache otherwise
+    fps.count()  # eager: 3 consumers would race the cache otherwise
 
-    if group_cap is not None:
-        okg = cnt.filter(F.col("n") <= group_cap).select("simhash")
-        over = cnt.filter(F.col("n") > group_cap).select("simhash", "rep")
-        okmem = fp.join(okg, "simhash", "left_semi")
-        star = (fp.join(over, "simhash")
-                .filter(F.col("doc_id") != F.col("rep"))
-                .select(F.col("rep").cast("bigint").alias("doc_a"),
-                        F.col("doc_id").cast("bigint").alias("doc_b")))
-        mem = okmem.select("simhash", "doc_id").union(
-            over.select("simhash", F.col("rep").alias("doc_id")))
-    else:
-        okmem, star = fp, None
-        mem = fp.select("simhash", "doc_id")
+    # windowed sizes, not a join with per-fingerprint counts: Spark
+    # estimates an inner join at the product of its sides, which turns the
+    # fingerprint-to-member expansion below into sort-merge joins
+    sized = capped.sized(fp, ["simhash"], "doc_id")
+    okmem, star = capped.split(sized, ["simhash"], "doc_id", group_cap)
+    mem = capped.in_cap_or_pivot(sized, "doc_id", group_cap) \
+        .select("simhash", "doc_id")
 
     h0 = (okmem.groupBy("simhash")
           .agg(F.array_sort(F.collect_list("doc_id")).alias("ds"))
           .filter(F.size("ds") >= 2)
           .select(F.explode(_pair_structs(F.col("ds"))).alias("p"))
           .select(F.col("p.doc_a").cast("bigint").alias("doc_a"),
-                  F.col("p.doc_b").cast("bigint").alias("doc_b")))
-    if star is not None:
-        h0 = h0.union(star)
-    h0 = h0.withColumn("hamming", F.lit(0).cast("bigint"))
+                  F.col("p.doc_b").cast("bigint").alias("doc_b"))
+          .union(star.select(
+              F.col("pivot_id").cast("bigint").alias("doc_a"),
+              F.col("member_id").cast("bigint").alias("doc_b")))
+          .withColumn("hamming", F.lit(0).cast("bigint")))
 
-    b1 = _seg_explode(spark, cnt, "band", "band_val", ["simhash"])
+    b1 = _seg_explode(spark, fps, "band", "band_val", ["simhash"])
     if band_cap is not None:
         s1 = b1.groupBy("band", "band_val").agg(F.count("*").alias("bn"))
         # the OVER-cap bucket list is what's tiny now (≤ 84·|fp|/cap rows);
@@ -960,7 +920,7 @@ def _mask_values() -> str:
 
 
 def simhash_pairs_sql(band_cap: int | None = _SIMHASH_BAND_CAP,
-                      group_cap: int | None = _SIMHASH_GROUP_CAP) -> str:
+                      group_cap: int | None = capped.GROUP_CAP) -> str:
     """DuckDB twin of ``dedup_simhash_pairs`` at the same caps — both are
     mirrored (like ``_JACCARD_DF_CAP``) so the hash compare holds at every
     SF, including ones where buckets/groups overflow. Both caps ``None``
@@ -968,32 +928,25 @@ def simhash_pairs_sql(band_cap: int | None = _SIMHASH_BAND_CAP,
     if band_cap is None and group_cap is None:
         return SIMHASH_PAIRS_BRUTE_SQL
     bc = (1 << 62) if band_cap is None else band_cap
-    gc = (1 << 62) if group_cap is None else group_cap
+    okmem, star = capped.split_sql("sized", ["simhash"], "doc_id", group_cap)
     return f"""
 WITH fp AS ({SIMHASH_SQL}),
-cnt AS (
-  SELECT simhash, count(*)::BIGINT AS n, min(doc_id)::BIGINT AS rep
-  FROM fp GROUP BY simhash
-), okmem AS (
-  SELECT f.simhash, f.doc_id FROM fp f
-  JOIN cnt c USING (simhash) WHERE c.n <= {gc}
+fps AS (SELECT DISTINCT simhash FROM fp),
+sized AS ({capped.sized_sql("fp", ["simhash"], "doc_id")}
+), okmem AS ({okmem}
 ), h0 AS (
   SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
   FROM okmem a JOIN okmem b
     ON a.simhash = b.simhash AND a.doc_id < b.doc_id
   UNION ALL
-  SELECT c.rep, f.doc_id FROM fp f JOIN cnt c USING (simhash)
-  WHERE c.n > {gc} AND f.doc_id != c.rep
-), mem AS (
-  SELECT simhash, doc_id FROM okmem
-  UNION ALL
-  SELECT simhash, rep AS doc_id FROM cnt WHERE n > {gc}
+  SELECT pivot_id, member_id FROM ({star})
+), mem AS ({capped.in_cap_or_pivot_sql("sized", "doc_id", group_cap)}
 ), combos AS (
   SELECT * FROM (VALUES {_combo_values()})
   t({_COMBO_COLS})
 ), b1 AS (
   SELECT c.simhash, s.band, {_sql_band_val('c.simhash')} AS band_val
-  FROM cnt c CROSS JOIN combos s
+  FROM fps c CROSS JOIN combos s
 ), s1 AS (
   SELECT band, band_val, count(*)::BIGINT AS bn FROM b1 GROUP BY 1, 2
 ), small1 AS (
@@ -1043,7 +996,7 @@ JOIN mem mb ON mb.simhash = rp.sb
 """
 
 
-SIMHASH_PAIRS_SQL = simhash_pairs_sql(_SIMHASH_BAND_CAP, _SIMHASH_GROUP_CAP)
+SIMHASH_PAIRS_SQL = simhash_pairs_sql()
 
 
 def dedup_simhash_band_stats(spark, sf_dir):
@@ -1314,7 +1267,7 @@ DIAGNOSTICS = {
     # dedup_simhash_band_stats; this one stays pytest-/bench-visible)
     "dedup_shingle_df_stats": (dedup_shingle_df_stats, SHINGLE_DF_STATS_SQL),
     # minhash bucket-cap observability (VERDICT r4 task 1): buckets over
-    # _MINHASH_GROUP_CAP degrade to star edges; this exposes how often
+    # capped.GROUP_CAP degrade to star edges; this exposes how often
     "dedup_minhash_group_stats": (dedup_minhash_group_stats,
                                   MINHASH_GROUP_STATS_SQL),
     # transitive closure of the pair lists — lives here (not in the

@@ -22,6 +22,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from docling_rag_spark.functions import capped
 from docling_rag_spark.plans.ann_index import (
     IVF_K as _IVF_K,
     N_PLANES as _NUM_PLANES,
@@ -236,34 +237,29 @@ ORDER BY score_e6 DESC, vec_id ASC LIMIT {_TOPK}
 """
 
 
-# Per-bucket member cap before the star fallback — the embedding analog of
-# the minhash band cap (queries/dedup.py::_MINHASH_GROUP_CAP): an
-# 8-hyperplane sign-LSH bucket holds an UNBOUNDED mass of identical
-# embeddings (a template farm hashes to one bucket), so the uncapped
-# bucket self-join enumerates m²/2 pairs from a single key. Over-cap
-# buckets degrade to (min-id rep, member) star edges — linear, each still
-# confirmed by the exact cosine, component-equivalent for dedup because a
-# near-identical mass matches its rep.
-_NEARDUP_GROUP_CAP = 1000
+def _lsh_buckets(spark, sf_dir):
+    return _t(spark, sf_dir, "embeddings").select(
+        F.col("vec_id").cast("bigint").alias("vec_id"), "embedding",
+        _bucket(F.col("embedding")).alias("bucket"))
 
 
-def vec_neardup_lsh(spark, sf_dir, group_cap: int | None = _NEARDUP_GROUP_CAP):
+def vec_neardup_lsh(spark, sf_dir, group_cap: int | None = capped.GROUP_CAP):
     """Near-dup pairs with LSH blocking — the production path: candidate
     pairs share an 8-hyperplane bucket (equi-join on a uniform key) instead
     of the O(N²) cross join; exact cosine confirms within the block. At
     10^9 vectors the bucket is the shuffle/partition key, so the join is
-    co-located, and the per-bucket quadratic is bounded by
-    ``_NEARDUP_GROUP_CAP`` (over-cap buckets emit star edges through the
-    bucket's minimum-id member instead of all pairs)."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("bucket")
-    mem = (_t(spark, sf_dir, "embeddings").select(
-        F.col("vec_id").cast("bigint").alias("vec_id"), "embedding",
-        _bucket(F.col("embedding")).alias("bucket"),
-        _norm(F.col("embedding")).alias("nrm"))
-        .select("*", F.count("*").over(w).alias("bn"),
-                F.min("vec_id").over(w).alias("rep")))
+    co-located. A sign-LSH bucket holds an unbounded mass of identical
+    embeddings (a template farm hashes to one bucket), so buckets over
+    ``group_cap`` emit star edges through their minimum-id member instead
+    of all pairs (``functions/capped.py``) — linear, each edge still
+    confirmed by the exact cosine, component-equivalent because a
+    near-identical mass matches its rep."""
+    mem = capped.sized(
+        _lsh_buckets(spark, sf_dir)
+        .withColumn("nrm", _norm(F.col("embedding"))),
+        ["bucket"], "vec_id")
+    small, star = capped.split(mem, ["bucket"], "vec_id", group_cap,
+                               payload=["embedding", "nrm"])
 
     def _side(df, tag):
         return df.select(F.col("vec_id").alias(f"vec_{tag}"),
@@ -274,20 +270,15 @@ def vec_neardup_lsh(spark, sf_dir, group_cap: int | None = _NEARDUP_GROUP_CAP):
     cos = F.floor(_dot(F.col("emb_a"), F.col("emb_b"))
                   / (F.col("nrm_a") * F.col("nrm_b")) * 1000000.0
                   ).cast("bigint")
-    small = mem if group_cap is None else mem.filter(
-        F.col("bn") <= group_cap)
     pairs = (_side(small, "a")
              .join(_side(small, "b"),
                    (F.col("bucket_a") == F.col("bucket_b"))
-                   & (F.col("vec_a") < F.col("vec_b"))))
-    if group_cap is not None:
-        reps = _side(mem.filter((F.col("bn") > group_cap)
-                                & (F.col("vec_id") == F.col("rep"))), "a")
-        members = _side(mem.filter((F.col("bn") > group_cap)
-                                   & (F.col("vec_id") != F.col("rep"))),
-                        "b")
-        pairs = pairs.unionByName(
-            reps.join(members, F.col("bucket_a") == F.col("bucket_b")))
+                   & (F.col("vec_a") < F.col("vec_b")))
+             .select("vec_a", "vec_b", "bucket_a", "emb_a", "emb_b",
+                     "nrm_a", "nrm_b")
+             .union(star.select("pivot_id", "member_id", "bucket",
+                                "pivot_embedding", "member_embedding",
+                                "pivot_nrm", "member_nrm")))
     return (pairs.withColumn("score_e6", cos)
             .filter(F.col("score_e6") >= _NEARDUP_MIN_E6)
             .select("vec_a", "vec_b",
@@ -295,35 +286,30 @@ def vec_neardup_lsh(spark, sf_dir, group_cap: int | None = _NEARDUP_GROUP_CAP):
                     "score_e6"))
 
 
-def neardup_lsh_sql(group_cap: int | None = _NEARDUP_GROUP_CAP) -> str:
-    """DuckDB twin of ``vec_neardup_lsh`` — the bucket cap + star-edge
-    fallback mirrored EXACTLY (count/min windows per bucket, in-cap full
-    expansion, over-cap (rep, member) edges; every edge exact-cosine
-    confirmed in both branches)."""
-    cap_pred = "" if group_cap is None else f" AND a.bn <= {group_cap}"
-    star = "" if group_cap is None else f"""
-  UNION ALL
-  SELECT a.vec_id AS vec_a, b.vec_id AS vec_b, a.bucket,
-         a.embedding AS emb_a, b.embedding AS emb_b
-  FROM mem a JOIN mem b ON a.bucket = b.bucket
-  WHERE a.bn > {group_cap} AND a.vec_id = a.rep AND b.vec_id <> b.rep"""
-    return f"""
-WITH bucketed AS (
+_LSH_BUCKETS_SQL = f"""
   SELECT vec_id::BIGINT AS vec_id, embedding,
          {_bucket_sql('embedding')} AS bucket
-  FROM embeddings
-),
-mem AS (
-  SELECT vec_id, embedding, bucket,
-         count(*) OVER (PARTITION BY bucket) AS bn,
-         min(vec_id) OVER (PARTITION BY bucket) AS rep
-  FROM bucketed
-),
+  FROM embeddings"""
+
+
+def neardup_lsh_sql(group_cap: int | None = capped.GROUP_CAP) -> str:
+    """DuckDB twin of ``vec_neardup_lsh`` — the bucket cap + star-edge
+    fallback mirrored EXACTLY through ``functions/capped.py``'s twins;
+    every edge exact-cosine confirmed in both branches."""
+    small, star = capped.split_sql("mem", ["bucket"], "vec_id", group_cap,
+                                   payload=["embedding"])
+    return f"""
+WITH bucketed AS ({_LSH_BUCKETS_SQL}),
+mem AS ({capped.sized_sql("bucketed", ["bucket"], "vec_id")}),
+small AS ({small}),
 cand AS (
   SELECT a.vec_id AS vec_a, b.vec_id AS vec_b, a.bucket,
          a.embedding AS emb_a, b.embedding AS emb_b
-  FROM mem a JOIN mem b
-    ON a.bucket = b.bucket AND a.vec_id < b.vec_id{cap_pred}{star}
+  FROM small a JOIN small b
+    ON a.bucket = b.bucket AND a.vec_id < b.vec_id
+  UNION ALL
+  SELECT pivot_id, member_id, bucket, pivot_embedding, member_embedding
+  FROM ({star})
 )
 SELECT vec_a, vec_b, bucket::BIGINT AS bucket,
        floor({_dot_sql('emb_a', 'emb_b')}
@@ -337,6 +323,27 @@ WHERE floor({_dot_sql('emb_a', 'emb_b')}
 
 
 NEARDUP_LSH_SQL = neardup_lsh_sql()
+
+
+def vec_neardup_bucket_stats(spark, sf_dir,
+                             group_cap: int | None = capped.GROUP_CAP):
+    """Cap observability for the near-dup LSH buckets: bucket count, how
+    many exceeded ``group_cap``, the largest bucket, and the pair rows the
+    star fallback avoided."""
+    g = (_lsh_buckets(spark, sf_dir).groupBy("bucket")
+         .agg(F.count("*").cast("bigint").alias("n")))
+    return capped.stats(g, group_cap)
+
+
+def neardup_bucket_stats_sql(group_cap: int | None = capped.GROUP_CAP) -> str:
+    """DuckDB twin of ``vec_neardup_bucket_stats``."""
+    return f"""
+WITH g AS (
+  SELECT bucket, count(*)::BIGINT AS n FROM ({_LSH_BUCKETS_SQL})
+  GROUP BY bucket
+)
+{capped.stats_sql("g", group_cap)}
+"""
 
 
 
@@ -765,6 +772,10 @@ QUERIES = {
 # path); kept out of the driver window, oracle still runs under pytest.
 DIAGNOSTICS = {
     "vec_neardup_cosine": (vec_neardup_cosine, NEARDUP_SQL),
+    # near-dup bucket-cap observability: how often vec_neardup_lsh's
+    # buckets fall back to star edges
+    "vec_neardup_bucket_stats": (vec_neardup_bucket_stats,
+                                 neardup_bucket_stats_sql()),
     # data-trained codebooks can't live in a static SQL string, so the
     # twin is the numpy reference in operators/pq.py (tests/test_pq.py
     # pins Spark ≡ reference bit-for-bit plus a recall floor vs exact)

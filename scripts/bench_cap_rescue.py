@@ -99,7 +99,7 @@ def main() -> int:
             rows = df.select(F.collect_set(a), F.collect_set(b)).first()
             return set(rows[0]) | set(rows[1])
 
-        # minhash LSH pairs (cap: _MINHASH_GROUP_CAP=1000)
+        # minhash LSH pairs (cap: capped.GROUP_CAP=1000)
         w_cap, got = _timed(lambda: minhash_pairs_for(docs))
         n_cap = got.count()
         m_cap = members(got, "doc_a", "doc_b")
@@ -111,7 +111,7 @@ def main() -> int:
             "capped_rows": n_cap, "uncapped_rows": n_un,
             "member_set_equal": m_cap == m_un}
 
-        # LSH near-dup (cap: _NEARDUP_GROUP_CAP=1000)
+        # LSH near-dup (cap: capped.GROUP_CAP=1000)
         w_cap, got = _timed(lambda: vec_neardup_lsh(spark, d))
         n_cap = got.count()
         m_cap = members(got, "vec_a", "vec_b")
@@ -124,7 +124,7 @@ def main() -> int:
             "capped_rows": n_cap, "uncapped_rows": n_un,
             "member_set_equal": m_cap == m_un}
 
-        # SemDeDup (cap: _SEMDEDUP_CLUSTER_CAP=1000; compare drop sets)
+        # SemDeDup (cap: capped.GROUP_CAP=1000; compare drop sets)
         w_cap, got = _timed(lambda: vec_semdedup_drop(spark, d))
         cap_drops = {(r["cluster"], r["drop_id"], r["kept_by"])
                      for r in got.collect()}

@@ -16,9 +16,15 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
+from pyspark.sql import functions as F
+from test_oracle_parity import SF_DIR
 
+from docling_rag_spark.functions.capped import GROUP_CAP
 from docling_rag_spark.queries.vectors import (
+    _bucket,
+    neardup_bucket_stats_sql,
     neardup_lsh_sql,
+    vec_neardup_bucket_stats,
     vec_neardup_lsh,
 )
 
@@ -85,3 +91,33 @@ def test_capped_component_equivalent_to_uncapped(spark, mega_dir):
     # and the uncapped path really was quadratic where the cap is linear
     assert len(full) == N_MASS * (N_MASS - 1) // 2
     assert len(capped) < len(full)
+
+
+def _bucket_sizes(spark, d):
+    return (spark.read.parquet(f"{d}/embeddings.parquet")
+            .groupBy(_bucket(F.col("embedding")).alias("bucket")).count()
+            .toPandas()["count"])
+
+
+def _duck_stats(d):
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW embeddings AS SELECT * FROM "
+                f"read_parquet('{d}/embeddings.parquet')")
+    return con.execute(neardup_bucket_stats_sql()).df()
+
+
+def test_bucket_stats_fire_on_mass(spark, mega_dir):
+    got = vec_neardup_bucket_stats(spark, mega_dir).toPandas()
+    s = got.iloc[0]
+    over = [int(n) for n in _bucket_sizes(spark, mega_dir) if n > GROUP_CAP]
+    assert int(s.n_over_cap) == len(over) >= 1
+    assert int(s.n_pair_rows_saved) == sum(
+        n * (n - 1) // 2 - (n - 1) for n in over)
+    assert _canon(got) == _canon(_duck_stats(mega_dir))
+
+
+def test_bucket_stats_inert_on_testdata(spark):
+    s = vec_neardup_bucket_stats(spark, SF_DIR).toPandas().iloc[0]
+    assert int(s.n_over_cap) == 0
+    assert int(s.n_pair_rows_saved) == 0
+    assert 0 < int(s.max_group) <= GROUP_CAP

@@ -20,10 +20,13 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
+from docling_rag_spark.functions.capped import (
+    GROUP_CAP as _SEMDEDUP_CLUSTER_CAP,
+)
 from docling_rag_spark.queries.clustering import (
-    _SEMDEDUP_CLUSTER_CAP,
     _SEMDEDUP_PIVOTS,
     SEMDEDUP_CLUSTER_STATS_SQL,
+    semdedup_cluster_stats_sql,
     semdedup_sql,
     vec_kmeans_assign,
     vec_semdedup_cluster_stats,
@@ -113,6 +116,27 @@ def test_cluster_stats_fire_and_match_formula(spark, mega_dir):
     want = sum(int(n) * (int(n) - 1) // 2 - (p * int(n) - p * (p + 1) // 2)
                for n in over)
     assert int(s.n_pair_rows_saved) == want > 0
+
+
+def test_cluster_stats_follow_operator_cap(spark, mega_dir):
+    """The stats take the same cluster_cap/pivots overrides as
+    vec_semdedup_drop, on both engines."""
+    cap, pivots = 200, 8
+    got = vec_semdedup_cluster_stats(spark, mega_dir, cluster_cap=cap,
+                                     pivots=pivots).toPandas()
+    sizes = vec_kmeans_assign(spark, mega_dir).toPandas() \
+        .groupby("cluster").size()
+    over = [int(n) for n in sizes[sizes > cap]]
+    s = got.iloc[0]
+    assert int(s.n_over_cap) == len(over) >= 1
+    want = sum(n * (n - 1) // 2 - (pivots * n - pivots * (pivots + 1) // 2)
+               for n in over)
+    assert int(s.n_pair_rows_saved) == want > 0
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW embeddings AS SELECT * FROM "
+                f"read_parquet('{mega_dir}/embeddings.parquet')")
+    assert _canon(got) == _canon(
+        con.execute(semdedup_cluster_stats_sql(cap, pivots)).df())
 
 
 def test_cap_inert_on_testdata(spark):
